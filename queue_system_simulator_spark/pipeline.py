@@ -30,7 +30,10 @@ from queue_system_simulator_spark.operators.transforms import (
     with_sim_arrival_time,
 )
 from queue_system_simulator_spark.schema import REFERENCE_EPOCH
-from queue_system_simulator_spark.sources.csv_source import read_requests_csv
+from queue_system_simulator_spark.sources.csv_source import (
+    REQUIRED_COLUMNS,
+    read_requests_csv,
+)
 
 
 @dataclass
@@ -61,9 +64,16 @@ def run_pipeline(
     ``queue_size`` is honoured only in ``fifo`` mode — in priority mode it
     is accepted and ignored, the reference's dead-config quirk
     (SURVEY §2 quirk 1, ``/root/reference/src/simulator.py:47-53``).
-    ``run_col`` names a column that partitions the input into independent
-    simulations (scenario sweep); None = one global run like the CLI.
+    ``run_col`` names one of the columns the reader keeps
+    (``csv_source.REQUIRED_COLUMNS``; extra CSV columns are pruned at
+    scan) that partitions the input into independent simulations
+    (scenario sweep); None = one global run like the CLI.
     """
+    if run_col is not None and run_col not in REQUIRED_COLUMNS:
+        raise ValueError(
+            f"run_col={run_col!r} is not a column the request reader keeps; "
+            f"supported: {', '.join(REQUIRED_COLUMNS)}"
+        )
     df = read_requests_csv(spark, csv_path)
     # Capture file position at scan time: the reference preserves CSV input
     # order via a *stable* arrival sort (/root/reference/src/simulator.py:41),

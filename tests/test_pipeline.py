@@ -1,9 +1,11 @@
-"""End-to-end pipeline vs the reference's own shipped workload.
+"""End-to-end pipeline on the reference's sample workload shape.
 
-Runs the engine's CLI-equivalent on the reference repo's
-``sample_requests.csv`` (read-only input — 25 rows, 5 users) and asserts
-the same externally-observable outcomes the reference's e2e test pins
-(all 25 complete, none rejected; ``/root/reference/tests/test_simulator.py:136-213``),
+Runs the engine's CLI-equivalent on a 25-row, 5-user request log written
+by the engine's seeded port of the reference generator
+(``sources.generator.generate_sample_requests``, the distribution behind
+the reference's shipped ``sample_requests.csv``) and asserts the same
+externally-observable outcomes the reference's e2e test pins (all 25
+complete, none rejected; reference ``tests/test_simulator.py:136-213``),
 plus renderer and empty-input behavior.
 """
 
@@ -11,13 +13,38 @@ from __future__ import annotations
 
 import math
 
+import pytest
+from pyspark.sql import functions as F
+
 from queue_system_simulator_spark.pipeline import render_report, run_pipeline
+from queue_system_simulator_spark.sources.generator import (
+    ISO_Z_SPARK,
+    generate_sample_requests,
+)
 
-SAMPLE_CSV = "/root/reference/sample_requests.csv"
+
+@pytest.fixture(scope="module")
+def sample_csv(spark, tmp_path_factory):
+    """The generator's 25-row, 5-user log as the CLI's CSV input."""
+    rows = (
+        generate_sample_requests(spark, 5, 5, seed=42)
+        .select(
+            "user_id",
+            F.date_format("request_time", ISO_Z_SPARK).alias("request_time"),
+            "processing_time",
+        )
+        .collect()
+    )
+    p = tmp_path_factory.mktemp("pipeline") / "sample_requests.csv"
+    p.write_text(
+        "user_id,request_time,processing_time\n"
+        + "".join(f"{r[0]},{r[1]},{r[2]}\n" for r in rows)
+    )
+    return str(p)
 
 
-def test_sample_workload_completes(spark):
-    res = run_pipeline(spark, SAMPLE_CSV, num_workers=1)
+def test_sample_workload_completes(spark, sample_csv):
+    res = run_pipeline(spark, sample_csv, num_workers=1)
     assert res.input_rows == 25
     assert res.negative_arrivals == 0
     s = res.scalar_stats.collect()[0]
@@ -37,16 +64,16 @@ def test_sample_workload_completes(spark):
     assert sum(api.values()) == 25
 
 
-def test_more_workers_never_increase_queuing(spark):
-    r1 = run_pipeline(spark, SAMPLE_CSV, num_workers=1)
-    r4 = run_pipeline(spark, SAMPLE_CSV, num_workers=4)
+def test_more_workers_never_increase_queuing(spark, sample_csv):
+    r1 = run_pipeline(spark, sample_csv, num_workers=1)
+    r4 = run_pipeline(spark, sample_csv, num_workers=4)
     q1 = r1.scalar_stats.collect()[0].avg_queuing_time
     q4 = r4.scalar_stats.collect()[0].avg_queuing_time
     assert q4 <= q1 + 1e-12
 
 
-def test_render_report_shape(spark):
-    res = run_pipeline(spark, SAMPLE_CSV)
+def test_render_report_shape(spark, sample_csv):
+    res = run_pipeline(spark, sample_csv)
     lines = render_report(res)
     assert lines[0] == "total requests: 25"
     assert any(line.startswith("api_5:") for line in lines)
@@ -103,6 +130,18 @@ def test_run_col_scenario_sweep(spark, tmp_path):
             )
             assert r.start_processing_time_by_worker == expected_start
             prev_finish = r.finish_processing_time_by_worker
+
+
+def test_run_col_outside_reader_columns_fails_at_call(spark, tmp_path):
+    # the reader keeps only the required columns, so an extra CSV column
+    # cannot partition the runs: reject it before any Spark job starts
+    p = tmp_path / "tenants.csv"
+    p.write_text(
+        "user_id,request_time,processing_time,tenant\n"
+        "user_a,2023-01-01T00:00:00Z,5.0,t1\n"
+    )
+    with pytest.raises(ValueError, match="user_id, request_time, processing_time"):
+        run_pipeline(spark, str(p), run_col="tenant")
 
 
 def test_duplicate_arrival_rows_get_stable_seq(spark, tmp_path):

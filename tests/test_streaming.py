@@ -608,31 +608,7 @@ def test_multibatch_split_invalidates_on_source_change(spark, tmp_path):
     n2 = drained_count()
     assert n1 > 0
     assert n2 == n1 // 2  # stale path-keyed cache would return n1 again
-    # the miss GCs dead-fingerprint siblings under the SAME mtime TTL the
-    # drain sweeper uses: a young dir survives (a concurrent session that
-    # already checked _SUCCESS may still be streaming from it), an aged
-    # one is swept on the next miss
-    import os
-    import tempfile
-    import time
-    from pathlib import Path
-
-    cache_root = (
-        Path(tempfile.gettempdir())
-        / "qss_spark_stream_multi"
-        / str(src_dir).strip("/").replace("/", "_")
-    )
-    splits = [
-        d.name
-        for d in cache_root.iterdir()
-        if d.is_dir() and d.name.startswith("n2")
-    ]
-    assert len(splits) == 2, splits  # old fingerprint is young -> kept
-    # age every split past the TTL, regenerate once more (rewrite bumps
-    # mtime_ns -> new fingerprint -> miss): both aged dirs are swept
-    for d in cache_root.iterdir():
-        old = time.time() - 3 * 3600
-        os.utime(d, (old, old))
+    # rewrite the same rows: a new mtime_ns is a new fingerprint
     (src_dir / "events.parquet").unlink()
     pq.write_table(
         pa.Table.from_pandas(half, preserve_index=False),
@@ -640,12 +616,6 @@ def test_multibatch_split_invalidates_on_source_change(spark, tmp_path):
     )
     n3 = drained_count()
     assert n3 == n2
-    splits = [
-        d.name
-        for d in cache_root.iterdir()
-        if d.is_dir() and d.name.startswith("n2")
-    ]
-    assert len(splits) == 1, splits
 
 
 def test_sweep_stale_drains_is_age_gated(tmp_path):
