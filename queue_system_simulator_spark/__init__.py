@@ -16,7 +16,7 @@ simulator), re-expressed Spark-first:
 
 Everything relational is declared with the DataFrame/SQL API so Catalyst
 performs pushdown/pruning/join-selection; only the inherently sequential
-simulation kernel drops to ``applyInPandas``.
+simulation kernel drops to Python (``mapInPandas`` over sorted groups).
 """
 
 __version__ = "0.1.0"

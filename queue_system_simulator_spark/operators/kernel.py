@@ -1,12 +1,13 @@
-"""The discrete-event simulation kernel (SURVEY §2 E1–E7) as a grouped,
-ordered, stateful Pandas UDF.
+"""The discrete-event simulation kernel (SURVEY §2 E1–E7) as an ordered,
+stateful Pandas UDF over sorted groups.
 
 One simulation run (queue + k servers + sliding-window rate limiter) is a
 single coupled feedback system and inherently sequential — so the engine
-runs it as plain Python *inside* ``groupBy(run cols).applyInPandas``:
-parallelism comes from many independent groups (scenario sweeps, tenants),
-which is exactly the 100 TB posture (SURVEY §4).  Each group's event list
-must fit one task; the per-group state is O(k + N·RPM).
+runs it as plain Python over groups sorted within hash partitions, one
+``mapInPandas`` call per partition (``_simulate_groups``): parallelism
+comes from many independent groups (scenario sweeps, tenants), which is
+exactly the 100 TB posture (SURVEY §4).  Each group's event list must fit
+one task; the per-group state is O(k + N·RPM).
 
 Clean-room reimplementation of the reference semantics:
 
@@ -37,9 +38,9 @@ Clean-room reimplementation of the reference semantics:
 * result order: by finish (−1 sentinel sorts last as +inf), tie-break by
   arrival-in-queue (``simulator.py:260-265``).
 
-Determinism under Spark task retry: the RNG is seeded per group as
-``Random((seed, group_key))`` — re-running a task reproduces the identical
-timeline (quirk 3).
+Determinism under Spark task retry: the RNG is seeded per group from
+``(seed, group key)`` — re-running a task, on any partition count,
+reproduces the identical timeline (quirk 3).
 """
 
 from __future__ import annotations
@@ -47,12 +48,12 @@ from __future__ import annotations
 import random
 from collections import deque
 from dataclasses import dataclass, replace
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 REJECTED = -1.0
@@ -312,84 +313,97 @@ def kernel_result_schema(group_cols: list[str], group_types: list[T.DataType]) -
     return T.StructType(fields)
 
 
+def _simulate_groups(
+    df: DataFrame,
+    group_cols: list[str],
+    params_for: Callable[[dict[str, Any]], SimParams],
+    partitions: int | None = None,
+) -> DataFrame:
+    """One DES per distinct ``group_cols`` value, one Python call per
+    partition.
+
+    Groups hash into ``partitions`` partitions (default: the session's
+    ``defaultParallelism``), each sorted by group, and ``mapInPandas``
+    streams a partition's Arrow batches through a single call: each batch
+    is converted to records once, cut into groups at key changes, and the
+    trailing group is carried into the next batch, so memory holds one
+    group plus one batch.  ``params_for(first row)`` gives a group's
+    parameters; its RNG seed is ``f"{seed}|" + "|".join(repr(k) ...)``
+    over the native key values (a null key is ``None``), the same on any
+    partition count or task retry (quirk 3).
+
+    The explicit ``repartition(P, ...)`` pins the Python stage's task
+    count: a bare groupBy's exchange is AQE-coalesced by BYTES, the wrong
+    proxy for the CPU-bound DES behind it (a 2.6 MB kernel shuffle
+    coalesced to 2 partitions and serialised onto 2 cores at sf0.1).
+    """
+    dupes = sorted({c for c in df.columns if df.columns.count(c) > 1})
+    if dupes:
+        raise ValueError(f"duplicate input column(s): {', '.join(dupes)}")
+    types = {f.name: f.dataType for f in df.schema.fields}
+    out_schema = kernel_result_schema(group_cols, [types[c] for c in group_cols])
+    out_cols = out_schema.names
+    integral = [isinstance(types[c], T.IntegralType) for c in group_cols]
+    slots = partitions or max(int(df.sparkSession.sparkContext.defaultParallelism), 1)
+
+    def key_of(row: dict) -> tuple:
+        # pandas reads a null as NaN, and an integral column holding one as
+        # floats: map both back to the native value
+        return tuple(
+            None if v is None or v != v else int(v) if i else v
+            for v, i in zip((row[c] for c in group_cols), integral)
+        )
+
+    def run_group(key: tuple, rows: list[dict]) -> list[dict]:
+        params = params_for(rows[0])
+        seed_str = f"{params.seed}|" + "|".join(repr(k) for k in key)
+        return simulate_events(rows, params, rng_seed=seed_str)
+
+    def frame(out: list[dict]) -> pd.DataFrame:
+        res = pd.DataFrame(out, columns=out_cols)
+        res["used_api_id"] = res["used_api_id"].astype("Int32")
+        return res
+
+    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        key, group = None, []
+        for pdf in batches:
+            records = pdf.to_dict("records")
+            ids = pdf.groupby(group_cols, sort=False, dropna=False).ngroup()
+            starts = np.flatnonzero(np.diff(ids.to_numpy(), prepend=-1)).tolist()
+            done: list[dict] = []
+            for a, b in zip(starts, [*starts[1:], len(records)]):
+                k = key_of(records[a])
+                if k != key:
+                    if group:
+                        done += run_group(key, group)
+                    key, group = k, []
+                group += records[a:b]
+            if done:
+                yield frame(done)
+        if group:
+            yield frame(run_group(key, group))
+
+    return (
+        df.repartition(slots, *group_cols)
+        .sortWithinPartitions(*group_cols)
+        .mapInPandas(run_partition, out_schema)
+    )
+
+
 def simulate(
     df: DataFrame,
     params: SimParams,
     group_cols: list[str] | None = None,
-    shards: int | None = None,
 ) -> DataFrame:
     """Distributed DES: one independent simulation per distinct group.
 
     ``df`` needs ``user_id, seq, sim_arrival_time, processing_time`` plus the
-    group columns.  Returns the enriched timeline (SIM_RESULT shape + status
-    and per-class enqueue totals).
-
-    ``shards``: when the grouping is fine (thousands of small independent
-    runs), per-group ``applyInPandas`` overhead (Arrow batch + pandas
-    construction per group) dominates the actual DES work.  Setting
-    ``shards=N`` hash-buckets groups into N coarse Arrow batches and runs
-    the per-group simulations inside each batch — identical results (the
-    per-group seed still derives from the GROUP key, so timelines and task
-    retries are unaffected), ~order-of-magnitude less per-call overhead.
-    At 100 TB pick N ≈ a few × total cores.
+    group columns, with no duplicate column names.  Returns the enriched
+    timeline (SIM_RESULT shape + status and per-class enqueue totals).
+    Parallelism is the session's: one Python call per partition runs every
+    group in it (``_simulate_groups``).
     """
-    group_cols = group_cols or ["run_id"]
-    in_schema = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
-    out_schema = kernel_result_schema(group_cols, [in_schema[c] for c in group_cols])
-    result_cols = [c for c, _ in KERNEL_RESULT_FIELDS]
-
-    def run_one(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = tuple(k.item() if hasattr(k, "item") else k for k in keys)
-        rows = pdf.to_dict("records")
-        # stable derived seed: identical on Spark task retry (quirk 3)
-        seed_str = f"{params.seed}|" + "|".join(repr(k) for k in keys)
-        out = simulate_events(rows, params, rng_seed=seed_str)
-        res = pd.DataFrame(out, columns=result_cols)
-        res["used_api_id"] = res["used_api_id"].astype("Int32")
-        for c, v in zip(group_cols, keys):
-            if c in res.columns:
-                res[c] = v
-            else:
-                res.insert(0, c, v)
-        return res[[c for c in out_schema.names]]
-
-    if shards is None:
-        # pin the Python stage's partition count (see below for why)
-        slots = max(int(df.sparkSession.sparkContext.defaultParallelism), 1)
-        return (
-            df.repartition(slots, *group_cols)
-            .groupBy(*group_cols)
-            .applyInPandas(run_one, out_schema)
-        )
-
-    shard_col = "__kernel_shard"
-    sharded = df.withColumn(
-        shard_col, F.pmod(F.xxhash64(*group_cols), F.lit(shards))
-    )
-
-    def run_shard(_keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns=[shard_col])
-        outs = [
-            run_one(gk if isinstance(gk, tuple) else (gk,), gpdf)
-            for gk, gpdf in pdf.groupby(group_cols, sort=True)
-        ]
-        return pd.concat(outs, ignore_index=True)
-
-    # Explicit repartition(shards, shard_col) pins the Python stage's
-    # partition count: a bare groupBy's exchange is AQE-coalesced by BYTES
-    # (advisory/minPartitionSize), which is the wrong proxy for the
-    # CPU-bound DES work behind it — measured at sf0.1: the 2.6 MB kernel
-    # shuffle coalesced to 2 post-shuffle partitions, serializing 64
-    # shards' simulations onto 2 cores (guide §2: partitioning must match
-    # the compute distribution, not the byte distribution).  The count is
-    # the shards parameter itself — already scale-adaptive (callers size
-    # it ~2x cores) — and hashpartitioning(shard_col, shards) satisfies
-    # the groupBy's clustering requirement, so no second exchange.
-    return (
-        sharded.repartition(shards, shard_col)
-        .groupBy(shard_col)
-        .applyInPandas(run_shard, out_schema)
-    )
+    return _simulate_groups(df, group_cols or ["run_id"], lambda row: params)
 
 
 def simulate_sweep(
@@ -407,39 +421,10 @@ def simulate_sweep(
     posture made literal: a million-cell sweep is just a million groups.
     """
     param_cols = param_cols or {}
-    group_cols = list(group_cols)
-    in_schema = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
-    out_schema = kernel_result_schema(group_cols, [in_schema[c] for c in group_cols])
-    result_cols = [c for c, _ in KERNEL_RESULT_FIELDS]
-
-    def run_group(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = tuple(k.item() if hasattr(k, "item") else k for k in keys)
-        overrides = {
-            field: pdf[col].iloc[0].item()
-            if hasattr(pdf[col].iloc[0], "item")
-            else pdf[col].iloc[0]
-            for field, col in param_cols.items()
-        }
-
-        params = replace(base_params, **overrides)
-        rows = pdf.drop(columns=list(param_cols.values())).to_dict("records")
-        seed_str = f"{params.seed}|" + "|".join(repr(k) for k in keys)
-        out = simulate_events(rows, params, rng_seed=seed_str)
-        res = pd.DataFrame(out, columns=result_cols)
-        res["used_api_id"] = res["used_api_id"].astype("Int32")
-        for c, v in zip(group_cols, keys):
-            if c in res.columns:
-                res[c] = v
-            else:
-                res.insert(0, c, v)
-        return res[[c for c in out_schema.names]]
-
-    # same Python-stage partition pinning as simulate(): the sweep's groups
-    # ARE the parallelism axis — never let byte-based AQE coalescing pack
-    # them onto a couple of cores
-    slots = max(int(df.sparkSession.sparkContext.defaultParallelism), 1)
-    return (
-        df.repartition(slots, *group_cols)
-        .groupBy(*group_cols)
-        .applyInPandas(run_group, out_schema)
+    return _simulate_groups(
+        df,
+        group_cols,
+        lambda row: replace(
+            base_params, **{f: row[c] for f, c in param_cols.items()}
+        ),
     )

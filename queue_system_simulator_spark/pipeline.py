@@ -104,9 +104,11 @@ def run_pipeline(
         num_workers=num_workers, queue_mode=queue_mode, queue_max_size=queue_size,
         seed=seed,
     )
+    cols = dict.fromkeys(
+        [*group_cols, "user_id", "seq", "sim_arrival_time", "processing_time"]
+    )
     timeline = simulate(
-        df.select(*group_cols, "user_id", "seq", "sim_arrival_time",
-                  "processing_time"),
+        df.select(*cols),
         params,
         group_cols=group_cols,
     )

@@ -168,3 +168,12 @@ def test_duplicate_arrival_rows_get_stable_seq(spark, tmp_path):
     # per-row service times differ, so a deterministic seq fixes which row
     # starts first: the file's first row (proc=3.0) must be served first.
     assert timelines[0][0][1] == 3.0
+
+
+def test_run_col_user_id_simulates_each_user(spark, sample_csv):
+    # user_id is both the run column and a kernel input column: the kernel
+    # must see it once, one independent simulation per user
+    res = run_pipeline(spark, sample_csv, run_col="user_id")
+    s = res.scalar_stats.collect()[0]
+    assert s.processed == 25 and s.rejected == 0
+    assert len({r.user_id for r in res.timeline.collect()}) == 5

@@ -12,10 +12,11 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from queue_system_simulator_spark.schema import TABLE_NAMES  # noqa: E402
 from queue_system_simulator_spark.session import get_spark  # noqa: E402
@@ -121,7 +122,8 @@ def main() -> int:
             failures.append(name)
             continue
         if spec.oracle is None:
-            print(f"ok*   {name}: rows-only ({len(srows)} rows, "
+            sh = frame_fingerprint(scols, srows)[2]
+            print(f"ok*   {name}: rows-only ({len(srows)} rows, {sh}, "
                   f"{time.time()-t0:.1f}s) [no oracle]")
             if not srows:
                 print(f"WARN  {name}: 0 rows")

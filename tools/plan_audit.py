@@ -13,8 +13,8 @@ the plan features the 100 TB posture depends on:
 
 Streaming queries are excluded: building them drains the stream (their plan
 evidence is the stream/batch oracle equivalence itself), and rows-only
-kernel queries are excluded because their cost model is the sharded
-``applyInPandas`` documented in operators/kernel.py.
+kernel queries are excluded because their cost model is the grouped
+``mapInPandas`` call documented in operators/kernel.py.
 
 Usage: python tools/plan_audit.py [sf_dir]  (writes PLANS.md)
 """
