@@ -44,6 +44,12 @@ from queue_system_simulator_spark.plans import (  # noqa: F401,E402
 #: is older than r07 and the r07 tier shrinks 47 -> 20.  Everything
 #: rotated OUT was driver-green in a prior round and stays registered +
 #: locally gated (COVERAGE_LEDGER.md is the committed snapshot).
+#:
+#: Round-14 rotation (VERDICT_r13 item 1): grades the five LSH consumers
+#: rewritten in r13, whose candidates now come from the shared blocking
+#: layer (``operators/blocking.py``).  Rotated out: the two function
+#: showcases, ``events_calendar_profile``, ``value_moments_by_type`` and
+#: ``dp_noisy_counts`` (r06-era, re-greened in r12, untouched since).
 DRIVER_WINDOW = [
     # --- continuity anchors (green every round r01..r11) ---
     "ingest_requests",
@@ -53,27 +59,28 @@ DRIVER_WINDOW = [
     # committing microbatches as manifest versions of the versioned
     # lake, exactly-once under crashes on either side of the commit) ---
     "versioned_streaming_sink",
-    # --- freshness re-greens: ALL 20 remaining r06-era queries ---
+    # --- freshness re-greens: r06-era queries ---
     "cogroup_click_context",
     "kcore_peel_rounds",
-    "array_functions_showcase",
     "column_profile_drift",
     "context_windows",
     "corpus_mix_sample",
     "curation_pipeline_report",
-    "dp_noisy_counts",
-    "events_calendar_profile",
     "filter_threshold_sweep",
     "lsh_threshold_sweep",
-    "map_functions_showcase",
     "quantile_normalize_embeddings",
     "sampled_count_estimate",
     "source_lang_entropy",
     "tfidf_cosine_pairs",
     "token_shard_assignment",
     "tokenizer_fertility_by_lang",
-    "value_moments_by_type",
     "zipf_exponent_fit",
+    # --- round-14: r13-rewritten LSH consumers (shared blocking layer) ---
+    "lsh_recall_eval",
+    "cross_source_dup_matrix",
+    "dedup_keep_best_quality",
+    "quality_dup_calibration",
+    "pair_graph_triangles",
     # --- freshness re-greens, r07-era: verdict's named family anchors ---
     "minhash_lsh_pairs",
     "dedup_clusters",

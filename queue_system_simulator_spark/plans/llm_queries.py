@@ -17,6 +17,7 @@ partition key (source / label / LSH band).
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +29,7 @@ from queue_system_simulator_spark.plans.registry import (
     register,
 )
 from queue_system_simulator_spark.schema import load_table
+from queue_system_simulator_spark.operators.blocking import band_join, posting_pairs
 from queue_system_simulator_spark.operators.transforms import (
     materialize,
     materialize_many,
@@ -329,26 +331,9 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-shingle counts straight off the per-doc array — no groupBy
     # pass over the exploded frame
     sizes = arrs.select("doc_id", F.size("shings").alias("n_sh"))
-    # inverted-index pair generation: one groupBy to build the posting list
-    # per (source, shingle), then emit C(k,2) ordered pairs from the sorted
-    # list JVM-side.  Same pair multiset as the equi-self-join the oracle
-    # runs, but the shingle table crosses the shuffle ONCE instead of twice
-    # and there is no join.  At 100 TB a stop-shingle with a huge posting
-    # list would make one quadratic row — cap/salt hot shingles there; the
-    # candidate semantics (pairs sharing a rare shingle) are unchanged.
-    posting = sh.groupBy("source", "shingle").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("docs")
-    )
-    pair_expr = F.expr(
-        "flatten(transform(docs, (x, i) -> "
-        "transform(slice(docs, i + 2, size(docs)), "
-        "y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-    inter = (
-        posting.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    # inverted-index pair counts: the same n_inter as the equi-self-join
+    # the oracle runs, with one shuffle of the shingle table and no join
+    inter = posting_pairs(sh, "doc_id", "shingle", block=["source"])
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("sa"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("sb"))
     out = (
@@ -421,41 +406,31 @@ def _minhash_wide(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _lsh_candidates(wide: DataFrame) -> DataFrame:
-    """LSH candidate pairs ``(doc_a, doc_b)`` from the wide signature frame.
-
-    Band keys are md5 over the 4 member columns in seed order (== the
-    oracle's string_agg ORDER BY seed); candidates come from a bucket
-    equi-join on (band, band_key) — never all-pairs.
-    """
-    n_bands = NUM_MINHASH // BAND_SIZE
+def minhash_bands(wide: DataFrame, carry: Sequence[str] = ()) -> DataFrame:
+    """LSH band rows ``(doc_id, *carry, band, band_key)`` of the wide
+    signature frame: 4 bands per doc, each keyed by the md5 over its 4
+    member columns in seed order (== the oracle's string_agg ORDER BY
+    seed)."""
 
     def band_key(b: int):
         cols = [F.col(f"mh_{s}") for s in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)]
         return F.md5(F.concat_ws(",", *cols))
 
-    bands = wide.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_key(b).alias("band_key"))
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.band_key")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    bk = [
+        F.struct(F.lit(b).alias("band"), band_key(b).alias("band_key"))
+        for b in range(NUM_MINHASH // BAND_SIZE)
+    ]
+    return wide.select(
+        "doc_id", *carry, F.explode(F.array(*bk)).alias("bk")
+    ).select("doc_id", *carry, "bk.band", "bk.band_key")
+
+
+def _lsh_candidates(wide: DataFrame) -> DataFrame:
+    """LSH candidate pairs ``(doc_a, doc_b)`` from the wide signature frame:
+    a bucket equi-join on (band, band_key) — never all-pairs."""
+    return band_join(
+        minhash_bands(wide), "doc_id", ["band", "band_key"]
+    ).distinct()
 
 
 
@@ -507,49 +482,16 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle, and ReuseExchange computes it once.  (Guide §2.4: two joins
     # + a cache fill removed; §2.5: candidates stay join-on-bucket, never
     # all-pairs.)
-    wide = _minhash_wide(spark, sf_dir)
-    n_bands = NUM_MINHASH // BAND_SIZE
-
-    def band_key(b: int):
-        cols = [
-            F.col(f"mh_{s}") for s in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)
-        ]
-        return F.md5(F.concat_ws(",", *cols))
-
-    bands = wide.select(
-        "doc_id",
-        *[F.col(f"mh_{s}") for s in range(NUM_MINHASH)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_key(b).alias("band_key")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id",
-        *[F.col(f"mh_{s}") for s in range(NUM_MINHASH)],
-        "bk.band",
-        "bk.band_key",
-    )
-    a, b = bands.alias("a"), bands.alias("b")
+    mh = [f"mh_{s}" for s in range(NUM_MINHASH)]
+    bands = minhash_bands(_minhash_wide(spark, sf_dir), carry=mh)
     n_match = sum(
-        F.when(F.col(f"a.mh_{s}") == F.col(f"b.mh_{s}"), 1).otherwise(0)
-        for s in range(NUM_MINHASH)
+        F.when(F.col(f"{c}_a") == F.col(f"{c}_b"), 1).otherwise(0) for c in mh
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        band_join(bands, "doc_id", ["band", "band_key"], carry=mh)
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            "doc_a",
+            "doc_b",
             n_match.cast("long").alias("n_match"),
             F.round(n_match.cast("double") / NUM_MINHASH, 6).alias(
                 "jaccard_est"
@@ -873,22 +815,10 @@ def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bk"),
     ).select("doc_id", "sig", "bk.band", "bk.band_key")
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = (
-        F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).cast("long")
-    )
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
+        band_join(bands, "doc_id", ["band", "band_key"], carry=["sig"])
+        .select("doc_a", "doc_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
@@ -3770,28 +3700,7 @@ def q_incremental_minhash_candidates(
 ) -> DataFrame:
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     wide = _minhash_wide(spark, sf_dir).join(src, "doc_id").cache()
-    n_bands = NUM_MINHASH // BAND_SIZE
-
-    def band_key(b: int):
-        cols = [
-            F.col(f"mh_{s}") for s in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)
-        ]
-        return F.md5(F.concat_ws(",", *cols))
-
-    bands = wide.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), band_key(b).alias("band_key")
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "source", "bk.band", "bk.band_key")
+    bands = minhash_bands(wide, carry=["source"])
     new_b = bands.filter(F.col("source") == "src0")
     corp_b = bands.filter(F.col("source") != "src0")
     cand = (
@@ -4835,19 +4744,7 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = materialize(_shingle_arrays(spark, sf_dir))
     sh = arrs.select("doc_id", "source", F.explode("shings").alias("shingle"))
     sizes = arrs.select("doc_id", F.size("shings").alias("n_sh"))
-    posting = sh.groupBy("source", "shingle").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("docs")
-    )
-    pair_expr = F.expr(
-        "flatten(transform(docs, (x, i) -> "
-        "transform(slice(docs, i + 2, size(docs)), "
-        "y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-    inter = (
-        posting.select(F.explode(pair_expr).alias("p"))
-        .groupBy("p.doc_a", "p.doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = posting_pairs(sh, "doc_id", "shingle", block=["source"])
     sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
         "n_sh", "na"
     )
@@ -5099,9 +4996,11 @@ GROUP BY 1, 2
     "(mirror sites, syndication, scraper overlap). The actionable "
     "summary on top of pair-level dedup: a hot off-diagonal cell means "
     "one source is largely derivable from another and can be dropped "
-    "wholesale before any per-document work. Composes the registered "
-    "MinHash-LSH pair plan verbatim; the rollup joins two broadcast "
-    "doc->source lookups and aggregates a frame that is already tiny.",
+    "wholesale before any per-document work. Candidates come from the "
+    "shared LSH candidate helper (the same banded pair set as "
+    "minhash_lsh_pairs, without the signature columns); the rollup joins "
+    "two broadcast doc->source lookups and aggregates a frame that is "
+    "already tiny.",
 )
 def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs-only consumer (the rollup only counts pairs): the candidate
@@ -5922,21 +5821,11 @@ def q_lsh_bands_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(nb).alias("n_bands"), "doc_id", "band", "band_key")
         )
         bands = b if bands is None else bands.unionByName(b)
-    a = bands.alias("a")
-    bb = bands.alias("b")
     cand = (
-        a.join(
-            bb,
-            (F.col("a.n_bands") == F.col("b.n_bands"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        band_join(
+            bands, "doc_id", ["n_bands", "band", "band_key"], carry=["n_bands"]
         )
-        .select(
-            F.col("a.n_bands").alias("n_bands"),
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
+        .select(F.col("n_bands_a").alias("n_bands"), "doc_a", "doc_b")
         .distinct()
         .cache()
     )
@@ -6074,16 +5963,8 @@ def q_prefix_filter_jaccard_pairs(
     # verify stage onto a handful of tasks (guide §2.5, the round's
     # central finding).
     slots = max(int(spark.sparkContext.defaultParallelism), 1)
-    pa = pref.select(
-        F.col("doc_id").alias("doc_a"), "shingle", F.col("n").alias("na")
-    )
-    pb = pref.select(
-        F.col("doc_id").alias("doc_b"), "shingle", F.col("n").alias("nb")
-    )
     cand = (
-        pa.join(pb, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "na", "nb")
+        band_join(pref, "doc_id", ["shingle"], carry=["n"])
         .repartition(slots, "doc_a", "doc_b")
         .dropDuplicates()
     )
@@ -6106,14 +5987,14 @@ def q_prefix_filter_jaccard_pairs(
         .select(
             "doc_a",
             "doc_b",
-            "na",
-            "nb",
+            "n_a",
+            "n_b",
             F.size(F.array_intersect("sh_a", "sh_b"))
             .cast("long")
             .alias("n_inter"),
         )
     )
-    uni = F.col("na") + F.col("nb") - F.col("n_inter")
+    uni = F.col("n_a") + F.col("n_b") - F.col("n_inter")
     jac = F.col("n_inter").cast("double") / uni
     return (
         inter.filter(jac >= PF_TAU)
@@ -6518,21 +6399,7 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     pref, mh_wide = materialize_many(
         pref_lazy, _minhash_wide(spark, sf_dir, sh=tok)
     )
-    cand = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .distinct()
-    )
+    cand = band_join(pref, "doc_id", ["shingle"], carry=["n"]).distinct()
     # deterministic candidate sample (pre-verify): per-partition top-N by
     # md5 of the id pair, merged on the driver — the cap that decouples
     # everything downstream from the corpus's pair mass
@@ -6564,14 +6431,14 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_a",
             "doc_b",
-            "na",
-            "nb",
+            "n_a",
+            "n_b",
             F.size(F.array_intersect("sh_a", "sh_b"))
             .cast("long")
             .alias("n_inter"),
         )
     )
-    uni = F.col("na") + F.col("nb") - F.col("n_inter")
+    uni = F.col("n_a") + F.col("n_b") - F.col("n_inter")
     jacc = F.col("n_inter").cast("double") / uni
     pairs = inter.filter(jacc >= PF_TAU).select(
         "doc_a", "doc_b", F.round(jacc, 6).alias("jaccard")
@@ -6967,15 +6834,8 @@ def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
-        tok.alias("a")
-        .join(
-            tok.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+        band_join(tok, "doc_id", ["shingle"])
+        .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("i"))
     )
     na = n.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
@@ -7002,18 +6862,7 @@ def q_blocking_strategy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "shingle")
     )
-    cand_prefix = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand_prefix = band_join(pref, "doc_id", ["shingle"]).distinct()
     # signatures from the SAME cached sampled shingle frame (a doc's
     # signature depends only on its own shingles)
     cand_lsh = _lsh_candidates(

@@ -1,7 +1,7 @@
 """Query registry: every operator the engine claims is registered here as a
 (name → Spark builder [+ DuckDB oracle SQL]) pair.
 
-The driver contract (``/root/repo/__spark_entry__.py``) compares each Spark
+The driver contract (``__spark_entry__.py`` at the repo root) compares each Spark
 result against its oracle at sf0.01 by row-count + schema + order-insensitive
 value hash, so:
 

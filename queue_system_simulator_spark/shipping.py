@@ -4,10 +4,10 @@ Functions passed to ``applyInPandas`` / ``mapInPandas`` / pandas UDFs are
 pickled BY REFERENCE when they live in an importable module: the worker
 re-imports ``queue_system_simulator_spark.…`` at unpickle time.  That works
 only if the package is importable on the worker — true when the driver
-process happens to run with cwd ``/root/repo`` (the worker daemon inherits
+process happens to run with the repo root as cwd (the worker daemon inherits
 the cwd, and ``python -m pyspark.daemon`` puts cwd on ``sys.path``), and
 false for any other caller, e.g. a harness that did
-``sys.path.insert(0, "/root/repo")`` from elsewhere: ``sys.path`` edits on
+``sys.path.insert(0, <repo root>)`` from elsewhere: ``sys.path`` edits on
 the driver do not propagate to workers.
 
 The portable fix (the same mechanism a real cluster deployment would use to

@@ -3,12 +3,15 @@
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 from queue_system_simulator_spark.plans import QUERIES, all_queries
 
+ROOT = Path(__file__).resolve().parents[1]
+
 
 def test_readme_counts_match_registry():
-    src = open("/root/repo/README.md").read()
+    src = (ROOT / "README.md").read_text()
     m = re.search(
         r"# (\d+) registered queries \((\d+) oracle-backed driver-facing "
         r"\+ (\d+) rows-only pytest-gated\)",
@@ -23,7 +26,7 @@ def test_readme_counts_match_registry():
 
 
 def test_queries_md_count_matches_registry():
-    src = open("/root/repo/QUERIES.md").read()
+    src = (ROOT / "QUERIES.md").read_text()
     m = re.search(r"(\d+) queries, (\d+) oracle-checked, (\d+) rows-only", src)
     assert m
     assert int(m.group(1)) == len(QUERIES)
@@ -46,3 +49,16 @@ def test_driver_window_is_exactly_fifty_and_oracled():
     for name, spec in QUERIES.items():
         if spec.oracle is None:
             assert name not in q, name
+
+
+def test_no_file_hardcodes_the_checkout_path():
+    """Tests, tools and the package find the repo from ``__file__``: a
+    hard-coded checkout path would make a second checkout (a parent commit
+    graded for before/after evidence) silently import this one."""
+    dirs = ["tests", "tools", "queue_system_simulator_spark"]
+    files = [f for d in dirs for f in sorted((ROOT / d).rglob("*.py"))]
+    assert len(files) > 50
+    for f in files:
+        src = f.read_text()
+        assert str(ROOT) not in src, f
+        assert not re.search(r"sys\.path\.insert\(0,\s*[\"']/", src), f

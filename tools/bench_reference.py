@@ -25,8 +25,10 @@ import json
 import random
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 REF = "/root/reference"
 
 
@@ -129,7 +131,7 @@ def main() -> None:
         "engine_sharded_rows_per_s": round(n / shard_s),
     }
     print(json.dumps(result))
-    with open("/root/repo/REF_THROUGHPUT.md", "w") as f:
+    with open(ROOT / "REF_THROUGHPUT.md", "w") as f:
         f.write(
             "# Measured head-to-head: reference DES vs engine kernel\n\n"
             "The reference publishes no numbers, so this is measured by\n"

@@ -10,8 +10,9 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from queue_system_simulator_spark.plans import QUERIES  # noqa: E402
 from queue_system_simulator_spark.session import get_spark  # noqa: E402

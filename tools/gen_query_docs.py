@@ -6,8 +6,10 @@ Usage: python tools/gen_query_docs.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from queue_system_simulator_spark.plans import QUERIES, all_oracles  # noqa: E402
 
@@ -41,7 +43,7 @@ def main() -> None:
         f"{len(QUERIES) - len(oracles)} rows-only "
         f"(pytest-gated, not driver-exposed).\n"
     )
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(ROOT / "QUERIES.md", "w") as f:
         f.writelines(lines)
     print(f"wrote QUERIES.md: {len(QUERIES)} queries")
 
