@@ -19,13 +19,14 @@ only operator that must see all values of a group on one task.  Per-group
 (run_id/user) percentiles shard naturally; a single global exact percentile
 has two scale paths: :func:`exact_percentiles_distributed` (range-partitioned
 rank selection — exact, no single-reducer funnel) and ``approx_percentile``
-(mergeable sketch, never in oracle-checked queries).  The API-domain zero-fill joins against a tiny
-in-memory dimension — always broadcast.
+(mergeable sketch, never in oracle-checked queries).  The API-domain
+zero-fill joins a tiny range dimension onto the counts; a what-if report
+(:func:`report_statistics`) instead computes G1–G5 in one aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from queue_system_simulator_spark.localframe import local_df
@@ -79,24 +80,17 @@ def release_pinned() -> None:
 PERCENTILES = (0.5, 0.75, 0.9, 0.99)
 
 
-def queuing_time_stats(
-    df: DataFrame, group_cols: list[str] | None = None, nan_on_empty: bool = True
-) -> DataFrame:
-    """G1+G2+G3 over a sim-result frame.
-
-    Input needs ``arrival_time_in_queue / start_processing_time_by_worker /
-    finish_processing_time_by_worker``.  The queuing-time aggregates apply the
-    C2 validity predicate to processed rows only; the counts do not
-    (reference semantics, ``statistics.py:28-42,104-121``).
-    """
+def _queuing_aggs() -> list[Column]:
+    """G1–G3 aggregate columns of :func:`queuing_time_stats`:
+    ``processed``, ``rejected``, ``avg_queuing_time`` and the
+    exact-percentile array ``pcts``."""
     fin = F.col("finish_processing_time_by_worker")
     is_proc = fin != REJECTED_SENTINEL
     start = F.col("start_processing_time_by_worker")
     arr = F.col("arrival_time_in_queue")
     valid = is_proc & (start >= 0) & (arr >= 0) & (start >= arr)
     qt = F.when(valid, start - arr)  # null outside the valid set → ignored by aggs
-
-    aggs = [
+    return [
         # coalesce: empty input → 0 counts (reference returns 0, not null)
         F.coalesce(F.sum(F.when(is_proc, 1).otherwise(0)), F.lit(0))
         .cast("long")
@@ -114,25 +108,58 @@ def queuing_time_stats(
             "array(0.5D, 0.75D, 0.9D, 0.99D))"
         ).alias("pcts"),
     ]
-    grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
-    out = grouped.agg(*aggs)
+
+
+def _queuing_columns(nan_on_empty: bool) -> list[Column]:
+    """Projects :func:`_queuing_aggs` onto the G1–G3 report columns."""
     p = F.col("pcts")
-    out = out.select(
-        *(group_cols or []),
-        "processed",
-        "rejected",
-        "avg_queuing_time",
-        p[0].alias("p50"),
-        p[1].alias("p75"),
-        p[2].alias("p90"),
-        p[3].alias("p99"),
-    )
+    values = {
+        "avg_queuing_time": F.col("avg_queuing_time"),
+        "p50": p[0],
+        "p75": p[1],
+        "p90": p[2],
+        "p99": p[3],
+    }
     if nan_on_empty:
         # reference renders NaN for empty inputs (statistics.py:64,118-121)
         nan = F.lit(float("nan"))
-        for c in ("avg_queuing_time", "p50", "p75", "p90", "p99"):
-            out = out.withColumn(c, F.coalesce(F.col(c), nan))
-    return out
+        values = {name: F.coalesce(v, nan) for name, v in values.items()}
+    return [
+        F.col("processed"),
+        F.col("rejected"),
+        *(v.alias(name) for name, v in values.items()),
+    ]
+
+
+def _enqueue_aggs(threshold: float = 20.0) -> list[Column]:
+    """G5 aggregate columns ``priority_queue_enqueued_total`` and
+    ``normal_queue_enqueued_total`` (see :func:`enqueue_totals`)."""
+    admitted = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
+    prio = F.coalesce(F.col("processing_time") < threshold, F.lit(False))
+    return [
+        F.sum(F.when(admitted & prio, 1).otherwise(0))
+        .cast("long")
+        .alias("priority_queue_enqueued_total"),
+        F.sum(F.when(admitted & ~prio, 1).otherwise(0))
+        .cast("long")
+        .alias("normal_queue_enqueued_total"),
+    ]
+
+
+def queuing_time_stats(
+    df: DataFrame, group_cols: list[str] | None = None, nan_on_empty: bool = True
+) -> DataFrame:
+    """G1+G2+G3 over a sim-result frame.
+
+    Input needs ``arrival_time_in_queue / start_processing_time_by_worker /
+    finish_processing_time_by_worker``.  The queuing-time aggregates apply the
+    C2 validity predicate to processed rows only; the counts do not
+    (reference semantics, ``statistics.py:28-42,104-121``).
+    """
+    grouped = df.groupBy(*group_cols) if group_cols else df.groupBy()
+    return grouped.agg(*_queuing_aggs()).select(
+        *(group_cols or []), *_queuing_columns(nan_on_empty)
+    )
 
 
 def api_usage_counts(
@@ -145,8 +172,9 @@ def api_usage_counts(
 
     Reference: init ``api_1..api_N → 0``, count over *processed* rows,
     skip null, warn+skip out-of-range (``statistics.py:126-141``).  Engine:
-    count → right-outer join onto ``spark.range(1, N+1)`` (broadcast — the
-    dimension is tiny), ``coalesce(count, 0)``.
+    count → left outer join of ``spark.range(1, N+1)`` onto the counts,
+    ``coalesce(count, 0)``.  No broadcast hint: a left outer join cannot
+    build its preserved (dimension) side, so Spark ignores one.
     """
     counts = (
         df.filter(F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL)
@@ -156,14 +184,10 @@ def api_usage_counts(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     dim = spark.range(1, num_apis + 1).select(F.col("id").cast("int").alias("api_id"))
-    return (
-        F.broadcast(dim)
-        .join(counts, "api_id", "left")
-        .select(
-            "api_id",
-            F.concat(F.lit("api_"), F.col("api_id")).alias("api_key"),
-            F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("usage_count"),
-        )
+    return dim.join(counts, "api_id", "left").select(
+        "api_id",
+        F.concat(F.lit("api_"), F.col("api_id")).alias("api_key"),
+        F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("usage_count"),
     )
 
 
@@ -178,30 +202,44 @@ def enqueue_totals(df: DataFrame, threshold: float = 20.0) -> DataFrame:
     reference's ``hasattr`` fallback (``queue_manager.py:137-155``) and the
     kernel — a bare ``col < threshold`` would evaluate to NULL and count the
     row in *neither* bucket."""
-    admitted = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
-    prio = F.coalesce(F.col("processing_time") < threshold, F.lit(False))
-    return df.select(
-        F.sum(F.when(admitted & prio, 1).otherwise(0))
-        .cast("long")
-        .alias("priority_queue_enqueued_total"),
-        F.sum(F.when(admitted & ~prio, 1).otherwise(0))
-        .cast("long")
-        .alias("normal_queue_enqueued_total"),
-    )
+    return df.select(*_enqueue_aggs(threshold))
 
 
-def simulation_statistics(
-    df: DataFrame, spark: SparkSession, num_apis: int = NUM_EXTERNAL_APIS
-) -> tuple[DataFrame, DataFrame]:
-    """The full G1–G5 bundle: (one-row scalar stats, long-format api counts).
+def report_statistics(
+    timeline: DataFrame, num_apis: int = NUM_EXTERNAL_APIS
+) -> DataFrame:
+    """Every statistic of one what-if report as ONE one-row aggregate over
+    the kernel's timeline, so a report runs the kernel once.
 
-    Long-format API counts instead of the reference's nested dict — map-shaped
-    output is hostile to SQL oracles (SURVEY §1.2).
+    Columns: ``input_rows`` (the kernel emits one row per input row,
+    rejected rows included), ``negative_arrivals`` (rows with
+    ``sim_arrival_time < 0``), ``scalar_stats`` — a struct of the
+    :func:`queuing_time_stats` columns (NaN on empty) followed by the
+    :func:`enqueue_totals` columns — and ``api_usage``, an array whose
+    element ``i − 1`` counts processed rows that used API ``i`` for
+    ``i`` in ``1..num_apis`` (null and out-of-domain ids count nowhere,
+    the zero-fill of :func:`api_usage_counts`).
     """
-    scalar = queuing_time_stats(df)
-    totals = enqueue_totals(df)
-    scalar = scalar.crossJoin(totals)
-    return scalar, api_usage_counts(df, spark, num_apis)
+    is_proc = F.col("finish_processing_time_by_worker") != REJECTED_SENTINEL
+    api = F.col("used_api_id")
+    return timeline.agg(
+        F.count(F.lit(1)).alias("input_rows"),
+        F.count_if(F.col("sim_arrival_time") < 0).alias("negative_arrivals"),
+        *_queuing_aggs(),
+        *_enqueue_aggs(),
+        F.array(
+            *(F.count_if(is_proc & (api == i)) for i in range(1, num_apis + 1))
+        ).alias("api_usage"),
+    ).select(
+        "input_rows",
+        "negative_arrivals",
+        F.struct(
+            *_queuing_columns(nan_on_empty=True),
+            "priority_queue_enqueued_total",
+            "normal_queue_enqueued_total",
+        ).alias("scalar_stats"),
+        "api_usage",
+    )
 
 
 __all__ = [
@@ -211,7 +249,7 @@ __all__ = [
     "queuing_time_stats",
     "api_usage_counts",
     "enqueue_totals",
-    "simulation_statistics",
+    "report_statistics",
     "with_queuing_time",
     "valid_queuing_rows",
     "exact_percentiles_distributed",

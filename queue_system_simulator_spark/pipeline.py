@@ -1,15 +1,21 @@
 """End-to-end pipeline: the engine's equivalent of the reference CLI
 ``python main.py <csv> [-w N] [-q M]`` (``/root/reference/main.py:17-159``).
 
-Stages (SURVEY §3.1): scan/validate → empty guard → epoch-relative arrival
-derivation (+ pre-epoch warning count) → DES kernel → sentinel-aware result
-ordering → G1–G5 statistics → console rendering (NaN→"N/A", api counts
-key-sorted).
+Stages (SURVEY §3.1): scan/validate → epoch-relative arrival derivation →
+DES kernel → one aggregate of every report statistic (input and pre-epoch
+counts, G1–G5) → empty guard → console rendering (NaN→"N/A", api counts
+key-sorted); the sentinel-aware ordered timeline stays lazy.
+
+A report is one pass: ``run_pipeline`` collects the one-row aggregate of
+``statistics.report_statistics`` — the only Spark action, so the kernel
+runs once — and hands back its statistics as driver-local frames, whose
+collects in ``render_report`` start no Spark job.
 
 A reference user switches by calling ``run_pipeline(spark, csv_path)`` —
 same semantics, but every stage before/after the kernel is a distributed
-DataFrame op, and the kernel itself shards across independent runs when
-``run_col`` is provided (the scale axis the single-process reference lacks).
+DataFrame op, and the kernel itself runs the independent simulations in
+parallel when ``run_col`` is provided (the scale axis the single-process
+reference lacks).
 """
 
 from __future__ import annotations
@@ -20,10 +26,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from queue_system_simulator_spark.localframe import local_df
 from queue_system_simulator_spark.operators.kernel import SimParams, simulate
 from queue_system_simulator_spark.operators.statistics import (
     NUM_EXTERNAL_APIS,
-    simulation_statistics,
+    report_statistics,
 )
 from queue_system_simulator_spark.operators.transforms import (
     result_order,
@@ -82,12 +89,7 @@ def run_pipeline(
     # task retries.  monotonically_increasing_id() over a deterministic scan
     # split encodes (partition, offset) and is stable for a given file.
     df = df.withColumn("__input_pos", F.monotonically_increasing_id())
-    n_input = df.count()
-    if n_input == 0:  # header-only/empty file → exit path (main.py:45-49)
-        return PipelineResult(None, None, None, 0, 0)
-
     df = with_sim_arrival_time(df, epoch)
-    n_negative = df.filter(F.col("sim_arrival_time") < 0).count()
 
     group_cols = [run_col] if run_col else ["__run"]
     if not run_col:
@@ -114,8 +116,25 @@ def run_pipeline(
     )
     if not run_col:
         timeline = timeline.drop("__run")
-    scalar, api = simulation_statistics(timeline, spark, NUM_EXTERNAL_APIS)
-    return PipelineResult(result_order(timeline), scalar, api, n_negative, n_input)
+    stats = report_statistics(timeline, NUM_EXTERNAL_APIS)
+    row = stats.collect()[0]
+    if row["input_rows"] == 0:  # header-only/empty file → exit path (main.py:45-49)
+        return PipelineResult(None, None, None, 0, 0)
+    scalar = local_df(
+        spark, [tuple(row["scalar_stats"])], stats.schema["scalar_stats"].dataType
+    )
+    api = local_df(
+        spark,
+        [(i, f"api_{i}", n) for i, n in enumerate(row["api_usage"], start=1)],
+        "api_id int, api_key string, usage_count long",
+    )
+    return PipelineResult(
+        result_order(timeline),
+        scalar,
+        api,
+        row["negative_arrivals"],
+        row["input_rows"],
+    )
 
 
 def _fmt(v) -> str:

@@ -457,8 +457,8 @@ LEFT JOIN (
 ) c USING (api_id)
 """,
     description="G4: per-API usage counts zero-filled against the configured "
-    "API domain (N=5), null skipped, out-of-range skipped (C4); broadcast "
-    "outer join against a range dimension (reference "
+    "API domain (N=5), null skipped, out-of-range skipped (C4); left "
+    "outer join of a range dimension onto the counts (reference "
     "/root/reference/src/statistics.py:126-141).",
 )
 def q_api_usage_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -473,14 +473,10 @@ def q_api_usage_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.sparkSession.range(1, 6)
         .select(F.col("id").cast("int").alias("api_id"))
     )
-    return (
-        F.broadcast(dim)
-        .join(counts, "api_id", "left")
-        .select(
-            "api_id",
-            F.concat(F.lit("api_"), F.col("api_id")).alias("api_key"),
-            F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("usage_count"),
-        )
+    return dim.join(counts, "api_id", "left").select(
+        "api_id",
+        F.concat(F.lit("api_"), F.col("api_id")).alias("api_key"),
+        F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("usage_count"),
     )
 
 

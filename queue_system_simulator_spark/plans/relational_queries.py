@@ -1551,8 +1551,7 @@ def q_time_travel_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "change_type STRING",
     )
     return (
-        F.broadcast(cats)
-        .join(d, "change_type", "left")
+        cats.join(d, "change_type", "left")
         .groupBy("change_type")
         .agg(
             F.count("delta").alias("n_users"),

@@ -14,7 +14,8 @@ raise on any malformed row (reference parity), or ``PERMISSIVE`` with a
 ``_corrupt_record`` column when the caller wants to *report* bad rows and
 keep going (the scalable posture: at 100 TB you quarantine bad rows, you
 don't abort the job).  The missing-column check reads only the header line
-via a tiny text scan, so validation does not touch the data.
+— the header-inference job of the default scan, or a tiny text scan on the
+explicit-schema path — so validation does not touch the data.
 """
 
 from __future__ import annotations
@@ -84,17 +85,6 @@ def read_requests_csv(
     Extra columns beyond the required three are tolerated (the reference
     ignores them: it indexes rows by name, ``csv_parser.py:62-64``).
     """
-    header = _read_header(spark, path)
-    if not header:  # empty file → empty frame (reference returns [])
-        return local_df(spark, [], REQUEST_SCHEMA)
-    validate_required_columns(header)
-
-    schema = REQUEST_SCHEMA
-    if mode.upper() == "PERMISSIVE":
-        schema = T.StructType(
-            list(REQUEST_SCHEMA.fields)
-            + [T.StructField("_corrupt_record", T.StringType(), True)]
-        )
     reader = (
         spark.read.option("header", True)
         .option("mode", mode)
@@ -102,17 +92,29 @@ def read_requests_csv(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
     )
     if extra_columns:
-        # project required columns only; unknown columns pruned at scan
+        # the header-inference job is the only header read: a 0-byte file
+        # infers no columns
         df = reader.csv(path)
+        if not df.columns:  # empty file → empty frame (reference returns [])
+            return local_df(spark, [], REQUEST_SCHEMA)
         validate_required_columns(df.columns)
-        df = df.select(
+        # project required columns only; unknown columns pruned at scan
+        return df.select(
             F.col("user_id").cast("string"),
             F.to_timestamp("request_time").alias("request_time"),
             F.col("processing_time").cast("double"),
         )
-    else:
-        df = reader.schema(schema).csv(path)
-    return df
+    header = _read_header(spark, path)
+    if not header:
+        return local_df(spark, [], REQUEST_SCHEMA)
+    validate_required_columns(header)
+    schema = REQUEST_SCHEMA
+    if mode.upper() == "PERMISSIVE":
+        schema = T.StructType(
+            list(REQUEST_SCHEMA.fields)
+            + [T.StructField("_corrupt_record", T.StringType(), True)]
+        )
+    return reader.schema(schema).csv(path)
 
 
 def corrupt_rows(df: DataFrame) -> DataFrame:

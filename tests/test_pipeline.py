@@ -12,11 +12,22 @@ plus renderer and empty-input behavior.
 from __future__ import annotations
 
 import math
+import random
+from datetime import datetime, timedelta, timezone
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from queue_system_simulator_spark.operators.kernel import (
+    REJECTED,
+    SimParams,
+    simulate_events,
+)
+from queue_system_simulator_spark.operators.transforms import with_sim_arrival_time
 from queue_system_simulator_spark.pipeline import render_report, run_pipeline
+from queue_system_simulator_spark.schema import REFERENCE_EPOCH
+from queue_system_simulator_spark.sources.csv_source import read_requests_csv
 from queue_system_simulator_spark.sources.generator import (
     ISO_Z_SPARK,
     generate_sample_requests,
@@ -177,3 +188,172 @@ def test_run_col_user_id_simulates_each_user(spark, sample_csv):
     s = res.scalar_stats.collect()[0]
     assert s.processed == 25 and s.rejected == 0
     assert len({r.user_id for r in res.timeline.collect()}) == 5
+
+
+# ------------------------------------------------------------ one pass
+
+
+def _final_plan(description: str) -> str:
+    """The executed (AQE final) part of a formatted plan description."""
+    return description.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
+
+
+def _plans_of_group(spark, group: str) -> tuple[list[int], list[str]]:
+    """Job ids of a job group and the final physical plans of the SQL
+    executions that ran them."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(executions.size()):
+        execution = executions.apply(i)
+        ids = execution.jobs().keySet().toSeq()
+        if {ids.apply(j) for j in range(ids.size())} & set(jobs):
+            plans.append(_final_plan(execution.physicalPlanDescription()))
+    return jobs, plans
+
+
+def test_report_runs_the_kernel_once_and_renders_without_jobs(spark, sample_csv):
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("one_pass_run", "run_pipeline")
+        res = run_pipeline(spark, sample_csv, num_workers=2)
+        sc.setJobGroup("one_pass_render", "render_report")
+        lines = render_report(res)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert lines[0] == "total requests: 25"
+    _, plans = _plans_of_group(spark, "one_pass_run")
+    python_plans = [p for p in plans if "MapInPandas" in p]
+    # one job chain runs the kernel, and runs it once
+    assert len(python_plans) == 1
+    assert python_plans[0].count("MapInPandas") == 1
+    render_jobs, _ = _plans_of_group(spark, "one_pass_render")
+    assert render_jobs == []
+
+
+EPOCH = datetime.fromisoformat(REFERENCE_EPOCH)
+UNIX = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def _write_log(path, rows) -> str:
+    """``rows``: (user, milliseconds after the epoch, processing seconds)."""
+    path.write_text(
+        "user_id,request_time,processing_time\n"
+        + "".join(
+            f"{u},{(EPOCH + timedelta(milliseconds=ms)):%Y-%m-%dT%H:%M:%S.%f}Z,{p}\n"
+            for u, ms, p in rows
+        )
+    )
+    return str(path)
+
+
+def _replay(rows, k: int, mode: str, bound: int | None) -> dict:
+    """The report of one global run, computed in process: the pipeline's
+    arrival times, seq order and group seed, then ``simulate_events``,
+    then numpy's linear percentiles."""
+    epoch_us = (EPOCH - UNIX) // timedelta(microseconds=1)
+    events = sorted(
+        ((epoch_us + ms * 1000) / 1e6 - epoch_us / 1e6, u, pos, p)
+        for pos, (u, ms, p) in enumerate(rows)
+    )
+    reqs = [
+        {"user_id": u, "seq": i + 1, "sim_arrival_time": t, "processing_time": p}
+        for i, (t, u, _, p) in enumerate(events)
+    ]
+    params = SimParams(num_workers=k, queue_mode=mode, queue_max_size=bound)
+    done = simulate_events(reqs, params, rng_seed=f"{params.seed}|0")
+    processed = [r for r in done if r["finish_processing_time_by_worker"] != REJECTED]
+    waits = [
+        r["start_processing_time_by_worker"] - r["arrival_time_in_queue"]
+        for r in processed
+        if r["start_processing_time_by_worker"] >= 0
+        and r["arrival_time_in_queue"] >= 0
+        and r["start_processing_time_by_worker"] >= r["arrival_time_in_queue"]
+    ]
+    pcts = np.percentile(waits, [50, 75, 90, 99]) if waits else [math.nan] * 4
+    return {
+        "input_rows": len(rows),
+        "negative_arrivals": sum(1 for r in reqs if r["sim_arrival_time"] < 0),
+        "processed": len(processed),
+        "rejected": len(done) - len(processed),
+        "avg_queuing_time": float(np.mean(waits)) if waits else math.nan,
+        **dict(zip(("p50", "p75", "p90", "p99"), map(float, pcts))),
+        "priority_queue_enqueued_total": sum(
+            1 for r in processed if r["processing_time"] < 20.0
+        ),
+        "normal_queue_enqueued_total": sum(
+            1 for r in processed if r["processing_time"] >= 20.0
+        ),
+        "api": {f"api_{i}": sum(1 for r in processed if r["used_api_id"] == i)
+                for i in range(1, 6)},
+        "api_failures": sum(1 for r in processed if r["used_api_id"] is None),
+    }
+
+
+def _report(res) -> dict:
+    s = res.scalar_stats.collect()[0].asDict()
+    return {
+        "input_rows": res.input_rows,
+        "negative_arrivals": res.negative_arrivals,
+        **s,
+        "api": {r["api_key"]: r["usage_count"] for r in res.api_counts.collect()},
+    }
+
+
+def _assert_report(got: dict, want: dict) -> None:
+    for key, value in want.items():
+        if key == "api_failures":
+            continue
+        if isinstance(value, float):
+            assert math.isclose(got[key], value, rel_tol=1e-12) or (
+                math.isnan(got[key]) and math.isnan(value)
+            ), key
+        else:
+            assert got[key] == value, key
+
+
+# three users, pre-epoch arrivals, both priority classes
+_MIXED = [
+    (f"user_{random.Random(i).randrange(3)}", -4000 + 1500 * i + 7 * (i % 5),
+     round(random.Random(100 + i).uniform(1, 10), 1) if i % 3 else 20.0 + i)
+    for i in range(40)
+]
+
+
+@pytest.mark.parametrize("k", [1, 2])
+@pytest.mark.parametrize(
+    "mode, bound", [("priority", None), ("fifo", None), ("fifo", 1)]
+)
+def test_report_equals_in_process_replay(spark, tmp_path, k, mode, bound):
+    path = _write_log(tmp_path / "mixed.csv", _MIXED)
+    want = _replay(_MIXED, k, mode, bound)
+    assert want["negative_arrivals"] > 0
+    if bound == 1:
+        assert want["rejected"] > 0  # the bounded queue really rejects
+    res = run_pipeline(spark, path, num_workers=k, queue_size=bound, queue_mode=mode)
+    _assert_report(_report(res), want)
+
+
+def test_report_skips_failed_api_calls(spark, tmp_path):
+    # 330 short requests inside 4 s exhaust 5 APIs x 60 rpm: the failed
+    # calls are processed with a null used_api_id and count in no api_i
+    rows = [("user_a", 12 * i, 0.01) for i in range(330)]
+    path = _write_log(tmp_path / "burst.csv", rows)
+    want = _replay(rows, 2, "priority", None)
+    assert want["api_failures"] > 0
+    res = run_pipeline(spark, path, num_workers=2)
+    _assert_report(_report(res), want)
+
+
+def test_negative_arrivals_equal_the_pre_epoch_filter_count(spark, tmp_path):
+    rows = [("user_a", ms, 2.0) for ms in (-9000, -1, 0, 1, 5000)] + [
+        ("user_b", -500, 25.0)
+    ]
+    path = _write_log(tmp_path / "pre_epoch.csv", rows)
+    res = run_pipeline(spark, path)
+    arrivals = with_sim_arrival_time(read_requests_csv(spark, path), REFERENCE_EPOCH)
+    pre_epoch = arrivals.filter(F.col("sim_arrival_time") < 0).count()
+    assert res.negative_arrivals == pre_epoch == 3
+    assert render_report(res)[1] == "requests with pre-epoch timestamps: 3"

@@ -11,6 +11,7 @@ from queue_system_simulator_spark.operators.statistics import (
     api_usage_counts,
     enqueue_totals,
     queuing_time_stats,
+    report_statistics,
 )
 from queue_system_simulator_spark.schema import SIM_RESULT_SCHEMA
 
@@ -268,3 +269,33 @@ class TestGlobalRank:
         empty = spark.range(0).select(F.col("id").alias("v"))
         got, n = global_row_number(empty, [F.col("v")], out_col="rn")
         assert n == 0 and got.count() == 0
+
+
+def test_report_statistics_matches_the_separate_aggregates(spark):
+    # the one-row report aggregate equals queuing_time_stats +
+    # enqueue_totals + api_usage_counts, incl. null, out-of-domain (0 and
+    # 4 for N=3), rejected and pre-epoch rows
+    rows = [
+        sim_row(qt=0.5, api=1, proc=5.0),
+        sim_row(qt=2.0, api=2, proc=25.0),
+        sim_row(qt=1.0, api=None),
+        sim_row(qt=3.0, api=4),
+        sim_row(qt=0.0, api=0, arrival=-2.0),
+        ("u", None, 2.0, -1.0, 1.0, 0.0, -1.0, 2),  # rejected, pre-epoch
+    ]
+    df = make_df(spark, rows)
+    out = report_statistics(df, num_apis=3).collect()[0]
+    assert out["input_rows"] == 6 and out["negative_arrivals"] == 2
+    scalar = queuing_time_stats(df).crossJoin(enqueue_totals(df)).collect()[0]
+    assert out["scalar_stats"].asDict() == scalar.asDict()
+    api = sorted(api_usage_counts(df, spark, num_apis=3).collect())
+    assert out["api_usage"] == [r["usage_count"] for r in api] == [1, 1, 0]
+
+
+def test_report_statistics_on_empty_input(spark):
+    out = report_statistics(make_df(spark, []), num_apis=2).collect()[0]
+    assert out["input_rows"] == 0 and out["negative_arrivals"] == 0
+    s = out["scalar_stats"]
+    assert s["processed"] == 0 and s["rejected"] == 0
+    assert all(math.isnan(s[c]) for c in ("avg_queuing_time", "p50", "p99"))
+    assert out["api_usage"] == [0, 0]
